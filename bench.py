@@ -210,16 +210,25 @@ def _prior_headline() -> dict[str, float]:
     ``BENCH_r<N>.json`` driver artifact (r14 verdict ask #2: four
     untouched relational queries read 2.5-4.5x slow in one window and
     dragged the geomean; the bench must notice such a block itself).
-    Empty dict when no artifact parses — the guard simply stays off."""
-    import glob
+    Only files git tracks count, so an artifact written earlier in the
+    same round is never compared with itself. Empty dict when no
+    artifact parses or git is unavailable — the guard simply stays off."""
     import re
+    import subprocess
 
     here = Path(__file__).resolve().parent
+    try:
+        tracked = subprocess.run(
+            ["git", "ls-files", "--", "BENCH_r*.json"],
+            cwd=here, capture_output=True, text=True, check=True,
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):
+        tracked = []
     paths = []
-    for p in glob.glob(str(here / "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
+    for name in tracked:
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", name)
         if m:
-            paths.append((int(m.group(1)), p))
+            paths.append((int(m.group(1)), str(here / name)))
     for _, p in sorted(paths, reverse=True):
         try:
             parsed = json.loads(Path(p).read_text()).get("parsed") or {}
@@ -524,15 +533,16 @@ def main() -> None:
         calibrations.append(_calibrate(spark))
 
     # Exact vs t-digest order statistics, measured (not asserted): the
-    # same per-returnflag median through the range-shuffle exact path
-    # and through the one-scan mergeable sketch, plus the sketch's
-    # observed relative error. At 100 TB the exact path's extra range
-    # shuffle is the cost of oracle-exactness; this row quantifies the
-    # trade on this machine at this SF. Goes into BENCH_SWEEP.json.
+    # same per-returnflag median through the histogram-refinement exact
+    # path and through the one-scan mergeable sketch, plus the sketch's
+    # observed relative error. At 100 TB the exact path's extra
+    # refinement passes are the cost of oracle-exactness; this row
+    # quantifies the trade on this machine at this SF. Goes into
+    # BENCH_SWEEP.json.
     tdigest_vs_exact = None
     if "--headline-only" not in sys.argv:
         from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-            exact_group_percentiles,
+            group_percentiles,
         )
         from etl_pipeline_project_auraverse_spark.operators.tdigest import (
             tdigest_quantiles,
@@ -543,9 +553,9 @@ def main() -> None:
         def _exact():
             return {
                 r["l_returnflag"]: r["p50"]
-                for r in exact_group_percentiles(
+                for r in group_percentiles(
                     li, "l_returnflag", "l_extendedprice", [0.5],
-                    names=["p50"], n_groups_hint=3,
+                    names=["p50"],
                 ).collect()
             }
 
@@ -579,27 +589,6 @@ def main() -> None:
             "tdigest_sec": sketch_sec,
             "tdigest_max_rel_err": round(rel_err, 6),
         }
-
-        # Same medians through the shuffle-free histogram-refinement
-        # operator (r9): exact values with NO data shuffle — must be
-        # bit-identical to the range-shuffle path and is the third
-        # point of the exactness/plan-shape trade this block measures.
-        from etl_pipeline_project_auraverse_spark.operators.order_stats import (
-            hist_group_percentiles,
-        )
-
-        def _hist():
-            return {
-                r["l_returnflag"]: r["p50"]
-                for r in hist_group_percentiles(
-                    li, "l_returnflag", "l_extendedprice", [0.5],
-                    names=["p50"],
-                ).collect()
-            }
-
-        hist_meds, hist_sec = _min3(_hist)
-        tdigest_vs_exact["hist_refine_sec"] = hist_sec
-        tdigest_vs_exact["hist_matches_exact"] = hist_meds == exact_meds
 
     # Cold-vs-warm index visibility (r14 verdict ask #7): within one
     # bench process the memo_table system re-reads its parquet snapshot

@@ -3,8 +3,7 @@
 A running total ordered over the whole frame is the textbook
 single-task funnel (``Window.orderBy(x)`` with no partition key pulls
 every row through one window task). This module computes the same
-result with the two-level plan ``operators/order_stats.py`` uses for
-percentiles:
+result with a two-level TeraSort-style plan:
 
 1. ``repartitionByRange(order_col)`` — every partition is a bounded,
    contiguous slice of the value domain.

@@ -1,11 +1,12 @@
 """t-digest approximate quantiles (Dunning & Ertl) — the sketch-path
 sibling of ``operators/order_stats.py``.
 
-The exact order-statistics operator pays a range shuffle per pass; the
-t-digest answers the same quantile questions in ONE scan with bounded
-error concentrated at the tails, which is the right trade at 100 TB
-for monitoring/binning use cases (the exact path stays the choice when
-the answer feeds an oracle-checked result).
+The exact order-statistics operator pays one scan per refinement pass
+(a stats or histogram aggregate, then a bounded fetch); the t-digest
+answers the same quantile questions in ONE scan with bounded error
+concentrated at the tails, which is the right trade at 100 TB for
+monitoring/binning use cases (the exact path stays the choice when the
+answer feeds an oracle-checked result).
 
 Construction (merging digest):
 1. per-partition: sort the Arrow batch, greedily merge neighbors into

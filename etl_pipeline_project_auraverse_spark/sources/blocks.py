@@ -43,7 +43,7 @@ from etl_pipeline_project_auraverse_spark.cache import persist_tracked
 BLOCK_PATTERNS: list[tuple[str, str, int]] = [
     ("json", r"\{[\s\S]+?\}", 0),  # embedded JSON objects (S5)
     ("json_arr", r"\[[\s\S]+?\]", 0),  # embedded JSON arrays (S6)
-    ("csv", r'((?:[\w" ]+,)+[\w" ]+\n(?:[^\n]*\n?)+)', 1),  # embedded CSV (S7)
+    ("csv", r'((?:[\w" ]+,)+[\w" ]+\n[\s\S]*)', 1),  # embedded CSV (S7)
     ("yaml", r"(?:[a-zA-Z0-9_]+:\s[^\n]+\n(?:\s+- .+\n)*)+", 0),  # YAML (S8)
     ("code", r"(def .+?:\n(?:\s+.+\n)*|print\(.+\))", 1),  # code blocks (S10)
     ("log", r"\[\d{4}-\d{2}-\d{2} .+?\] .+", 0),  # log lines (S11)

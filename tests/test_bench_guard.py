@@ -17,7 +17,8 @@ import bench
 
 def test_prior_headline_reads_newest_artifact() -> None:
     prior = bench._prior_headline()
-    # the repo carries BENCH_r14.json with a parsed 50-query block
+    # the newest git-tracked BENCH_r<N>.json carries a parsed 50-query
+    # block
     assert len(prior) == 50
     assert all(isinstance(v, float) for v in prior.values())
     assert prior["q01_pricing_summary"] > 0

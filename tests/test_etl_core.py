@@ -64,6 +64,22 @@ def test_mixed_document_block_types(spark):
     assert len(logs) == 2 and all("2026-03-01" in r[0] for r in logs)
 
 
+def test_scan_blocks_long_csv_document(spark, tmp_path):
+    # a per-line group loop in the csv pattern recursed once per line
+    # in Java's regex engine and overflowed the stack near 2,500 lines
+    n = 3000
+    body = "name,qty\n" + "".join(f"item{i},{i}\n" for i in range(n))
+    (tmp_path / "long.csv.txt").write_text("Preamble.\n\n" + body)
+    docs = blocks.read_text_documents(spark, str(tmp_path / "long.csv.txt"))
+    got = [
+        r["block"]
+        for r in blocks.scan_blocks(docs)
+        .filter(F.col("source_type") == "csv")
+        .collect()
+    ]
+    assert got == [body]
+
+
 def test_empty_document_error_sentinel(spark, tmp_path):
     p = tmp_path / "empty.txt"
     p.write_text("just prose with no structure at all\n")
